@@ -41,6 +41,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the source INSIDE it, so a "successful" rename can still mean a lost
   * race; see [[loadOrBuild]]).
   *
+  * The build's parquet write, the root mkdir, the markers and the publish
+  * rename go through the fork-free local filesystem ([[graft.fs.LocalFs]]):
+  * on a `file:` root the stock one starts a `chmod` process for every file
+  * and directory it creates. Modes are unchanged — the root is still 0700.
+  *
   * Root resolution: conf [[AssetStore.DirConf]]; unset defaults to a
   * USER-OWNED directory — `<user.home>/.cache/graft_assets`, created
   * 0700 — never the shared world-writable `java.io.tmpdir`, where another
@@ -157,8 +162,26 @@ object AssetStore {
   // builds (write + publish). Bench stamps builds_n/build_sec into its
   // artifact so steady-state totals and build cost stay separately visible
   // round-over-round (VERDICT r16 #3 — run 1's warm-up absorbs the builds,
-  // which otherwise vanish from every recorded number).
+  // which otherwise vanish from every recorded number). Each build adds its
+  // EXCLUSIVE time: an asset whose build frame loads another asset (the
+  // pair index reads the shingle relation) builds that one on the same
+  // thread, and the nested build's time is counted once, not again inside
+  // its parent's — so the total never exceeds the wall time it spans.
   private[graft] val buildNanos = new java.util.concurrent.atomic.AtomicLong(0L)
+  // wall nanos of the builds nested inside the current thread's build
+  private val nestedBuildNanos = ThreadLocal.withInitial[java.lang.Long](() => 0L)
+
+  /** Runs one build, adding its exclusive wall time to [[buildNanos]]. */
+  private def timedBuild(f: => Unit): Unit = {
+    val t0 = System.nanoTime()
+    val outer = nestedBuildNanos.get
+    nestedBuildNanos.set(0L)
+    try f finally {
+      val total = System.nanoTime() - t0
+      buildNanos.addAndGet(total - nestedBuildNanos.get)
+      nestedBuildNanos.set(outer + total)
+    }
+  }
 
   /** The artifact's own file inventory (name:length of every DATA file —
     * dot-files and the markers themselves excluded), sorted. Written as
@@ -209,7 +232,10 @@ object AssetStore {
       case Some(root) =>
         val sig = corpusSignature(spark, dir)
         val path = new Path(root, s"$sig/${tag}_v$version")
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // the fork-free local filesystem for the root mkdir, the manifest
+        // and the publish (graft.fs.LocalFs); other schemes are unchanged
+        val fs = path.getFileSystem(
+          graft.fs.LocalFs.hadoopConf(spark.sparkContext.hadoopConfiguration))
         // ensure the root exists USER-ONLY before anything lands under it
         // (0700 — artifacts under a shared tmpdir would otherwise be
         // pre-plantable/tamperable by any local user, ADVICE r16)
@@ -226,11 +252,11 @@ object AssetStore {
             val m = new Path(path, "_MANIFEST")
             fs.exists(m) && readSmall(fs, m) == manifestOf(fs, path)
           }
-        if (!complete) {
-          val t0 = System.nanoTime()
+        if (!complete) timedBuild {
           val tmp = new Path(root,
             s"$sig/.${tag}_v$version.tmp-${java.util.UUID.randomUUID}")
-          build.write.mode("overwrite").parquet(tmp.toString)
+          build.write.options(graft.fs.LocalFs.conf).mode("overwrite")
+            .parquet(tmp.toString)
           writeSmall(fs, new Path(tmp, "_MANIFEST"), manifestOf(fs, tmp))
           // Publish. Hadoop rename(tmp, path) onto an EXISTING directory
           // "succeeds" by moving tmp INSIDE path, so a rename returning
@@ -265,7 +291,6 @@ object AssetStore {
                 s"asset publish failed and no complete artifact at $path")
             }
           }
-          buildNanos.addAndGet(System.nanoTime() - t0)
         }
         spark.read.parquet(path.toString)
     }

@@ -1,7 +1,11 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import graft.fs.LocalFs
 import graft.functions.Formatters
 
 /** Sink surface (SURVEY.md §2.1 S6–S10): the reference's archive/email
@@ -10,7 +14,10 @@ import graft.functions.Formatters
   *  - S9 archive sink: the reference copies artifacts into
   *    `{client}/{address}/` directories (app.py:107-119) — that directory
   *    layout *is* a partitioned write: `partitionBy(client, address)` gives
-  *    the same tree plus partition pruning on read-back.
+  *    the same tree; a client's read-back lists and reads its own directory
+  *    only. The write goes through the engine's fork-free local filesystem
+  *    ([[graft.fs.LocalFs]]), so a `file:` archive starts no `chmod`
+  *    process per file and directory.
   *  - S10 email sink: side-effecting per-record delivery with
   *    skip-if-unconfigured (app.py:131-133) — `foreachPartition` with one
   *    client per partition (the executor-resource pattern; never per row).
@@ -28,21 +35,51 @@ object Sinks {
 
   /** S9: archive the rendered letters partitioned by client — sanitized
     * partition values, idempotent overwrite-by-key (dynamic partition
-    * overwrite), exactly the reference's re-generation semantics.
+    * overwrite), exactly the reference's re-generation semantics. Written
+    * through [[graft.fs.LocalFs]]: on a `file:` archive the stock local
+    * filesystem starts a `chmod` process for every file and directory it
+    * creates, several per client directory.
     */
   def archiveLetters(letters: DataFrame, outDir: String): Unit =
     letters
       .withColumn("client_dir", Formatters.sanitizeName(col("client_name")))
       .write
+      .options(LocalFs.conf)
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("client_dir")
       .parquet(outDir)
 
-  /** Read-back with partition pruning: one client's archive only. */
-  def readClientArchive(spark: SparkSession, outDir: String, client: String): DataFrame =
-    spark.read.parquet(outDir)
-      .filter(col("client_dir") === Formatters.sanitizeName(lit(client)))
+  /** Read-back of one client's archive: only `<outDir>/client_dir=<value>`
+    * is listed and read (`basePath` keeps `client_dir` a column), so the
+    * cost does not grow with the number of archived clients — a read of the
+    * whole archive lists every sibling directory, through a job of its own
+    * once there are more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` of them. A
+    * client with no letters has no directory and falls back to the filtered
+    * whole-archive read (an empty frame with the archive's schema), as does
+    * a value whose partition type would not infer as a string on its own (a
+    * numeric-looking name).
+    */
+  def readClientArchive(spark: SparkSession, outDir: String, client: String): DataFrame = {
+    val clientDir = Formatters.sanitizeName(lit(client))
+    def wholeArchive = spark.read.parquet(outDir).filter(col("client_dir") === clientDir)
+    // the partition value, folded on the driver from the analyzed form of the
+    // writer's own expression (one definition of the sanitizer)
+    val value = Option(spark.range(1).select(clientDir).queryExecution.analyzed
+      .expressions.head.eval()).map(_.toString).filter(_.nonEmpty)
+    val partDir = value.map(v => new Path(outDir,
+      ExternalCatalogUtils.getPartitionPathString("client_dir", v)))
+    val exists = partDir.exists { p =>
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    }
+    if (!exists) wholeArchive
+    else {
+      val one = spark.read.option("basePath", outDir).parquet(partDir.get.toString)
+      if (one.schema("client_dir").dataType != StringType) wholeArchive
+      else one.filter(col("client_dir") === clientDir)
+    }
+  }
 
   /** A pluggable per-record delivery transport (the SMTP boundary). */
   trait Transport extends Serializable {

@@ -360,7 +360,7 @@ object DocsStream {
       Tables.documents(spark, dir).filter(col("doc_id") % 5 =!= 0)
         .select(md5(col("text")).as("content_md5"), col("doc_id"))
         .groupBy(col("content_md5")).agg(min(col("doc_id")).as("exact_match")))
-    val q = Tables.readStreamTable(spark, dir, "documents")
+    val admitted = Tables.readStreamTable(spark, dir, "documents")
       .filter(col("doc_id") % 5 === 0)
       .withColumn("content_md5", md5(col("text")))
       .join(corpusMd5, Seq("content_md5"), "left")
@@ -368,9 +368,11 @@ object DocsStream {
         when(col("exact_match").isNotNull, lit("exact"))
           .otherwise(lit("new")).as("verdict"),
         col("exact_match").as("match_doc"))
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    EventsStream.withStatePartitions(spark) {
+      val q = admitted.writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
     spark.table(name).orderBy(col("doc_id"))
   }
 
@@ -408,14 +410,16 @@ object DocsStream {
       GraftBridge.column(BloomFilterMightContain(
         GraftBridge.expression(lit(bloomBytes)),
         GraftBridge.expression(xxhash64(v))))
-    val q = Tables.readStreamTable(spark, dir, "documents")
+    val screened = Tables.readStreamTable(spark, dir, "documents")
       .filter(col("doc_id") % 5 === 0)
       .withColumn("bands", bandSigs(col("text")))
       .select(col("doc_id"),
         exists(col("bands"), b => mightContain(b)).as("suspect"))
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    EventsStream.withStatePartitions(spark) {
+      val q = screened.writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
     spark.table(name).orderBy(col("doc_id"))
   }
 }

@@ -75,10 +75,19 @@ object EventsStream {
     * (via the shared [[graft.operators.Analytics.withSessionConf]]) so two
     * concurrent streaming starts cannot interleave set/restore and leave
     * the session's batch width lowered (ADVICE r17).
+    *
+    * The same scope selects the fork-free local filesystem
+    * ([[graft.fs.LocalFs.conf]]): the started query's Hadoop conf is built
+    * from the session confs, and its checkpoint (offset log, commit log,
+    * state-store deltas) is written through FileContext, which the stock
+    * local filesystem serves with a `readlink` process per rename and a
+    * `chmod` process per file. Every streaming start of the engine
+    * (EventsStream and DocsStream) goes through this scope.
     */
   private[streaming] def withStatePartitions[T](spark: SparkSession)(f: => T): T =
     graft.operators.Analytics.withSessionConf(spark)(
-      "spark.sql.shuffle.partitions" -> statePartitions(spark).toString)(f)
+      ("spark.sql.shuffle.partitions" -> statePartitions(spark).toString) +:
+        graft.fs.LocalFs.conf.toSeq: _*)(f)
 
   case class Ev(user_id: Long, ts_us: Long)
   case class Sess(user_id: Long, start_us: Long, end_us: Long, n_events: Long)
@@ -431,7 +440,7 @@ object EventsStream {
     */
   private def publishOver(sp: SparkSession, merged: DataFrame, target: String): Unit = {
     val staging = target + ".staging"
-    merged.write.mode("overwrite").parquet(staging)
+    merged.write.options(graft.fs.LocalFs.conf).mode("overwrite").parquet(staging)
     val conf = sp.sparkContext.hadoopConfiguration
     val tPath = new org.apache.hadoop.fs.Path(target)
     val sPath = new org.apache.hadoop.fs.Path(staging)
@@ -532,6 +541,60 @@ object EventsStream {
       .orderBy(col("day"))
   }
 
+  /** A fresh `run*` directory for a `foreachBatch` upsert target, under
+    * `<java.io.tmpdir>/<name>/pid_<pid>/`. The target must outlive the
+    * streaming run (the returned frame reads it lazily), so this JVM's
+    * namespace is kept across calls and removed at JVM exit; a later call
+    * removes the namespaces whose OWNING PROCESS IS DEAD — never by an age
+    * heuristic: a concurrent JVM whose run stalls past any mtime horizon
+    * (GC pause, suspended bench) must not lose its live target mid-stream.
+    * A namespace whose pid is live is removed only on proof of pid reuse:
+    * the live process STARTED after the namespace was last written, so it
+    * cannot be the writer. Entries with no adjudicable owner (pre-namespace
+    * `run*` directories, malformed names) are removed after two days.
+    */
+  private def scratchRunDir(name: String): String = {
+    val parent = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), name)
+    java.nio.file.Files.createDirectories(parent)
+    val staleAfterMs = 2L * 24 * 3600 * 1000
+    val now = System.currentTimeMillis()
+    val myPid = ProcessHandle.current.pid
+    Option(parent.toFile.listFiles()).getOrElse(Array.empty)
+      .filter { d =>
+        if (d.getName.startsWith("pid_"))
+          d.getName.stripPrefix("pid_").toLongOption match {
+            case Some(pid) if pid == myPid => false     // always keep our own
+            case Some(pid) =>
+              val h = ProcessHandle.of(pid)
+              if (!(h.isPresent && h.get.isAlive)) true // owner is dead
+              else {                                    // live: reused iff
+                val started = h.get.info.startInstant   //  born after the dir
+                started.isPresent &&                    //  stopped changing
+                  started.get.toEpochMilli > d.lastModified()
+              }
+            case None => true   // malformed namespace: nobody owns it
+          }
+        else now - d.lastModified() > staleAfterMs      // legacy run* dirs
+      }
+      .foreach(rmTree)
+    val mine = parent.resolve(s"pid_$myPid")
+    java.nio.file.Files.createDirectories(mine)
+    if (scratchOwned.add(mine.toString))
+      sys.addShutdownHook(rmTree(mine.toFile))
+    java.nio.file.Files.createTempDirectory(mine, "run").toString
+  }
+
+  /** This JVM's scratch namespaces, each with its exit hook registered. */
+  private val scratchOwned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Delete `f` and, unless it is a symlink, everything under it (a link
+    * planted in the shared tmpdir is removed, never followed). */
+  private def rmTree(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    f.delete(); ()
+  }
+
   /** q132: the PRODUCTION form of q131 — the same KMV distinct-count
     * Aggregator in watermarked UPDATE mode with a `foreachBatch` keyed
     * upsert sink (the q23-era overwrite-by-key pattern). q131's
@@ -562,22 +625,7 @@ object EventsStream {
   def streamingKmvUpdate(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.PortableHash
     val kmv = udaf(graft.functions.KmvSketch)
-    // self-cleaning managed parent: a slope-guard sweep runs this query
-    // many times, and each run's target must outlive its own session (the
-    // returned frame reads it lazily) — so instead of leaking a temp dir
-    // per invocation, stale sibling runs older than 2h are removed here
-    val parent = java.nio.file.Paths.get("/tmp/graft_kmv_upsert")
-    java.nio.file.Files.createDirectories(parent)
-    val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-    Option(parent.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.lastModified() < cutoff)
-      .foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-        }
-        rm(d)
-      }
-    val target = java.nio.file.Files.createTempDirectory(parent, "run").toString
+    val target = scratchRunDir("graft_kmv_upsert")
     val stream = Tables.eventsStream(spark, dir)
       // watermarks require TIMESTAMP event time (UTC session: same instant)
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -663,49 +711,7 @@ object EventsStream {
     * over events).
     */
   def streamingTopK(spark: SparkSession, dir: String): DataFrame = {
-    // Run dirs are namespaced per-JVM (`pid_<pid>/run…`) and cleanup only
-    // sweeps namespaces whose OWNING PROCESS IS DEAD — never an age
-    // heuristic: a concurrent JVM whose run stalls past any mtime horizon
-    // (GC pause, suspended bench) must not lose its live leaderboard
-    // target mid-stream. ProcessHandle liveness is the ownership oracle;
-    // our own namespace is reused across calls in this JVM.
-    val parent = java.nio.file.Paths.get("/tmp/graft_topk_upsert")
-    java.nio.file.Files.createDirectories(parent)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-    }
-    // Age fallback ONLY for dirs with no adjudicable owner: legacy
-    // pre-namespace `run*` dirs and malformed names. Generous (days, not
-    // minutes) — it only has to bound /tmp growth, never race a live run.
-    // A namespace whose pid IS live is deleted only on positive proof of
-    // pid recycling: the live process STARTED after the namespace was last
-    // written, so it cannot be the writer (the true owner died first and
-    // froze the mtime). Age alone is never grounds to delete a live pid's
-    // namespace — a multi-day run must not lose its leaderboard target.
-    val staleAfterMs = 2L * 24 * 3600 * 1000
-    val now = System.currentTimeMillis()
-    val myPid = ProcessHandle.current.pid
-    Option(parent.toFile.listFiles()).getOrElse(Array.empty)
-      .filter { d =>
-        if (d.getName.startsWith("pid_"))
-          d.getName.stripPrefix("pid_").toLongOption match {
-            case Some(pid) if pid == myPid => false     // always keep our own
-            case Some(pid) =>
-              val h = ProcessHandle.of(pid)
-              if (!(h.isPresent && h.get.isAlive)) true // owner is dead
-              else {                                    // live: recycled iff
-                val started = h.get.info.startInstant   //  born after the dir
-                started.isPresent &&                    //  stopped changing
-                  started.get.toEpochMilli > d.lastModified()
-              }
-            case None => true   // malformed namespace: nobody owns it
-          }
-        else now - d.lastModified() > staleAfterMs      // legacy run* dirs
-      }
-      .foreach(rm)
-    val mine = parent.resolve(s"pid_${ProcessHandle.current.pid}")
-    java.nio.file.Files.createDirectories(mine)
-    val target = java.nio.file.Files.createTempDirectory(mine, "run").toString
+    val target = scratchRunDir("graft_topk_upsert")
     val stream = Tables.eventsStream(spark, dir)
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", AppendDelay)

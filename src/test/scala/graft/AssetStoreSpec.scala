@@ -186,6 +186,23 @@ class AssetStoreSpec extends SparkSpec {
     assert(again.toSeq == orig.toSeq && again.nonEmpty)
   }
 
+  test("build time is exclusive: a nested build is not counted again in its parent") {
+    val s = spark.newSession()
+    s.conf.set(AssetStore.DirConf, Files.createTempDirectory("graft_assets_nested").toString)
+    val before = AssetStore.buildNanos.get()
+    val t0 = System.nanoTime()
+    AssetStore.loadOrBuild(s, sf001, "nested_outer", 1) {
+      AssetStore.loadOrBuild(s, sf001, "nested_inner", 1) {
+        Thread.sleep(400)
+        s.range(10).toDF("id")
+      }
+    }.collect()
+    val wall = System.nanoTime() - t0
+    val counted = AssetStore.buildNanos.get() - before
+    assert(counted >= 400L * 1000 * 1000, s"vacuous: $counted ns counted")
+    assert(counted <= wall, s"$counted ns of build time counted inside $wall ns of wall time")
+  }
+
   test("default asset root is user-scoped, never the bare shared tmpdir") {
     val root = new java.io.File(AssetStore.defaultRoot)
     val sharedTmp = new java.io.File(System.getProperty("java.io.tmpdir"))
