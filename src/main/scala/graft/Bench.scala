@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Machine-weather evidence stamped into every benchmark artifact: the
   * round-9 driver run was distorted by co-resident load and nothing in the
@@ -37,23 +36,22 @@ private[graft] object LoadEvidence {
   }
 }
 
+/** The driver-style benchmark: a warm-up pass, then two timed in-sequence
+  * passes of every query at `SPARK_GRAFT_SF_DIR` (per-query minimum), on
+  * `SPARK_GRAFT_CPUS` cores; one JSON line plus a tiny trailing twin.
+  *
+  * Assets run ON at the default root (`~/.cache/graft_assets`), and that
+  * root is shared across runs on purpose: the first run on a corpus builds
+  * the artifacts (its `asset_builds_n` / `asset_build_sec` say so) and
+  * later runs load them, the steady state a long-lived deployment sees.
+  * For a build-path run, wipe the root first (`scripts/gates.sh` does when
+  * its chain includes the tests or verify stage).
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val loadBefore = LoadEvidence.loadavg
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // replay-harness pin: the engine default for streaming state width is
-      // cluster parallelism (scale-safe); the measured tiny-replay optimum
-      // is 4 (see EventsStream.statePartitions) and belongs to the harness
-      .config("graft.stream.statePartitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.envCpus)
     // Warm-up pass at the benchmark scale factor: JIT-compiles each query's
     // generated code with enough iterations to reach C2 (a tiny-SF warmup
     // never crosses the compile thresholds). Caches populated by the warmup
@@ -113,9 +111,10 @@ object Bench {
     // 2–3× with JIT position and co-resident memory pressure, so the
     // artifact carries BOTH numbers — "in_sequence" (the contractual
     // min-of-passes above) and "isolated" (fully-warm, cold-cache, solo
-    // back-to-back min-of-two in the same JVM — the IsoQ steady-state
-    // protocol) — letting a bad-weather scoring run be adjudicated against
-    // recorded evidence instead of narrative. Not added to `value`.
+    // back-to-back min-of-two in the same JVM — the `Probe --iso`
+    // steady-state protocol) — letting a bad-weather scoring run be
+    // adjudicated against recorded evidence instead of narrative. Not added
+    // to `value`.
     // Skip the heavies re-timing entirely in the over-budget regime: the 5
     // costliest queries dominate such a run, so min-of-two solo reruns
     // would add MORE wall-clock than the skipped second pass saved — the

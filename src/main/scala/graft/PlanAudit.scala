@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the physical-plan properties the engine's scale design depends on
   * (pushdown, pruning, broadcast, top-k, codegen) for key queries — the
   * .explain audit loop. Run: `sbt "runMain graft.PlanAudit"`.
@@ -16,20 +14,11 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // replay-harness pin: the engine default for streaming state width is
-      // cluster parallelism (scale-safe); the measured tiny-replay optimum
-      // is 4 (see EventsStream.statePartitions) and belongs to the harness
-      .config("graft.stream.statePartitions", "4")
-      // audit the BUILD plans: with the asset layer on, the shingle-tier
-      // pipelines collapse to artifact scans and every shape assertion
-      // below would be vacuous
-      .config(graft.assets.AssetStore.DirConf, "")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // audit the BUILD plans: with the asset layer on, the shingle-tier
+    // pipelines collapse to artifact scans and every shape assertion
+    // below would be vacuous
+    val spark = Session.build("8", Some("ERROR"),
+      Seq(graft.assets.AssetStore.DirConf -> ""))
     val dir = "/root/testdata/sf0.01"
     def audit(name: String, wanted: Seq[String]): Unit = {
       val df = SparkEntry.queries(name)(spark, dir)

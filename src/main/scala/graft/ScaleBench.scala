@@ -188,18 +188,7 @@ object ScaleBench {
   }
 
   private[graft] def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // replay-harness pin: the engine default for streaming state width is
-      // cluster parallelism (scale-safe); the measured tiny-replay optimum
-      // is 4 (see EventsStream.statePartitions) and belongs to the harness
-      .config("graft.stream.statePartitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(cpus)
     // the scale probes measure the BUILD plans: with the persisted asset
     // layer on, q36/q38/q101/q102's pipelines would collapse to a parquet
     // scan of whichever JVM built the artifact first, and the slope rows

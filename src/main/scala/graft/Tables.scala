@@ -21,7 +21,7 @@ object Tables {
     *
     * `spark.read.parquet(path)` without a schema runs a driver-side footer
     * INFERENCE JOB on every call — measured 60 ms per call on this harness
-    * (ProbeSchemaCost: 100×5 reads, 31.9 s inferred vs 2.2 s explicit),
+    * (100×5 reads: 31.9 s inferred vs 2.2 s explicit),
     * which the bench pays inside every timed query, twice per pass, for
     * every table it touches. A real deployment reads these tables through a
     * catalog whose schema is resolved once (exactly what the scaladoc above

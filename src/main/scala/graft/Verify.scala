@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -19,26 +18,18 @@ object Verify {
       } else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.contains))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // replay-harness pin: the engine default for streaming state width is
-      // cluster parallelism (scale-safe); the measured tiny-replay optimum
-      // is 4 (see EventsStream.statePartitions) and belongs to the harness
-      .config("graft.stream.statePartitions", "4")
+    val spark = Session.build(Session.envCpus, extra = Seq(
       // DuckDB/pyarrow-friendly timestamps in the dumped result parquet
       // (default INT96 is a legacy type some readers mis-handle).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     // The correctness gate runs the STRONG form of conf-gated proofs:
     // q152 carries the batch-rebuild-equality twin and its n_mismatch
     // column here (bench leaves the proof off — the production shape).
     spark.conf.set("graft.ann.verifyRebuild", "true")
+    // optional 4th arg: comma-separated k=v session confs, applied last, to
+    // check a conf-gated query form (e.g. graft.minhash.dfCap=0)
+    if (args.length > 3)
+      Session.parseConfs(args(3)).foreach { case (k, v) => spark.conf.set(k, v) }
     // Wipe stale results: a failed query must not leave a previous run's
     // output behind for the compare to pick up.
     def rm(f: java.io.File): Unit = {

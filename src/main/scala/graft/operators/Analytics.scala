@@ -546,7 +546,7 @@ object Analytics {
 
   /** q138's edge-state build frames, pre-checkpoint — split out so the
     * evidence dump ([[graft.DumpPr138]]) can explain the build phase that
-    * the checkpoint hides from ExplainMain. Returns (checkpointed distinct
+    * the checkpoint hides from `graft.Probe --explain`. Returns (checkpointed distinct
     * pair set, degree-annotated edge frame NOT yet checkpointed, pinned
     * width). The caller must free the pair checkpoint once the edge frame
     * is materialized.

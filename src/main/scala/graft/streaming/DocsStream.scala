@@ -257,8 +257,6 @@ object DocsStream {
         (col("n_inter") * 5 >= (col("sz_n") + col("sz_c") - col("n_inter")) * 4)
           .as("verified"))
 
-  private[graft] def profEnriched(spark: SparkSession, changed: DataFrame,
-      idx: CarriedIndex): DataFrame = enrichedOf(changed, idx)
   private[graft] def profCands(spark: SparkSession, changed: DataFrame,
       idx: CarriedIndex): DataFrame = candsOf(enrichedOf(changed, idx), idx)
 
@@ -313,7 +311,7 @@ object DocsStream {
     // count (graft.stream.statePartitions) like every EventsStream query —
     // unlowered it inherited the session's batch shuffle width and paid a
     // per-batch state commit/reload per partition for a ledger of a few
-    // thousand booleans (the ProfStream breakdown, OPTIMIZATION_r17.md)
+    // thousand booleans (the `Probe --stream` breakdown, OPTIMIZATION_r17.md)
     EventsStream.withStatePartitions(spark) {
       val q = streamingIncrementalNearDedupOf(spark, changed, idx)
         .writeStream.format("memory").queryName(name).outputMode("append")

@@ -46,7 +46,7 @@ object EventsStream {
     * replay suites, which run under several values).
     *
     * The replay-scale value (4) was measured in the round-17 optimization
-    * pass with the StreamingQueryProgress breakdown (ProfStream): the
+    * pass with the StreamingQueryProgress breakdown (`Probe --stream`): the
     * per-batch state commit/reload walks every store instance (stores ×
     * partitions files per batch — the interval join runs FOUR stores), so
     * at replay scale the wall cost of BOTH the data batch and the
@@ -393,33 +393,34 @@ object EventsStream {
     * goes through a staging dir (an in-place overwrite would clobber its
     * own input mid-scan).
     *
-    * A missing/empty target seeds an empty archive — but ONLY via the
-    * analysis-time "no data there yet" failure (`AnalysisException`). Any
-    * other exception must fail the batch loudly: swallowing, say, a
-    * transient IO error as "empty" would let the subsequent overwrite
-    * erase every previously-closed key (the silent-archive-reset bug the
-    * round-9 review caught).
+    * The live target is read through [[lastGeneration]].
     */
   private[graft] def upsertBatch(target: String, keys: Seq[String],
       newestFirst: Seq[org.apache.spark.sql.Column])(batch: DataFrame): Unit = {
     import org.apache.spark.sql.expressions.Window
     val sp = batch.sparkSession
-    val existing =
-      try sp.read.parquet(target)
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        // a crash inside publishOver's two-rename window leaves the last
-        // generation at target+".old" — recover from it rather than silently
-        // re-seeding an empty archive (ADVICE r17 / the round-9 reset class)
-        val aside = target + ".old"
-        try sp.read.parquet(aside)
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            batch.schema) } }
     val w = Window.partitionBy(keys.map(col): _*).orderBy(newestFirst: _*)
-    val merged = existing.unionByName(batch)
+    val merged = lastGeneration(sp, target, batch.schema).unionByName(batch)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
     publishOver(sp, merged, target)
+  }
+
+  /** The last generation [[publishOver]] published at `target`: the target
+    * itself, else the `target + ".old"` aside a crash between publishOver's
+    * two renames leaves, else (nothing published yet) an empty frame of
+    * `schema`. Only the analysis-time "no data there" failure
+    * (`AnalysisException`) falls through: swallowing, say, a transient IO
+    * error as "empty" would let the next overwrite erase every
+    * previously-published row (the silent-archive-reset class).
+    */
+  private def lastGeneration(sp: SparkSession, target: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    def read(path: String)(orElse: => DataFrame): DataFrame =
+      try sp.read.parquet(path)
+      catch { case _: org.apache.spark.sql.AnalysisException => orElse }
+    read(target)(read(target + ".old")(
+      sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)))
   }
 
   /** Publish `merged` over `target` when the plan READS the live target:
@@ -446,17 +447,23 @@ object EventsStream {
     val sPath = new org.apache.hadoop.fs.Path(staging)
     val aside = new org.apache.hadoop.fs.Path(target + ".old")
     val fs = tPath.getFileSystem(conf)
-    if (fs.exists(aside)) fs.delete(aside, true)
     val hadPrev = fs.exists(tPath)
-    if (hadPrev && !fs.rename(tPath, aside))
-      throw new java.io.IOException(s"failed to set aside $target")
+    // With a live target, an aside is a stale generation: clear it so the
+    // target can move there. With no target, the aside IS the last
+    // generation (a crash between the two renames) and stays readable
+    // until the new generation has landed.
+    if (hadPrev) {
+      if (fs.exists(aside)) fs.delete(aside, true)
+      if (!fs.rename(tPath, aside))
+        throw new java.io.IOException(s"failed to set aside $target")
+    }
     if (!fs.rename(sPath, tPath)) {
       // put the previous generation back before failing — the caller must
       // never observe a missing target with a live staging dir
       if (hadPrev) fs.rename(aside, tPath)
       throw new java.io.IOException(s"failed to publish $staging over $target")
     }
-    if (hadPrev) fs.delete(aside, true)
+    fs.delete(aside, true)
   }
 
   def foreachBatchUpsert(spark: SparkSession, dir: String, targetDir: String): DataFrame = {
@@ -674,12 +681,8 @@ object EventsStream {
       .orderBy(col("value").desc, col("event_id"))
     val batchTop = batch.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-    val existing =
-      try sp.read.parquet(target)
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          batchTop.schema) }
-    val merged = existing.unionByName(batchTop).drop("rank")
+    val merged = lastGeneration(sp, target, batchTop.schema)
+      .unionByName(batchTop).drop("rank")
       .dropDuplicates("event_id")
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

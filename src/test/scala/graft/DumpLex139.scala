@@ -1,11 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Evidence supplement for q139/q142's lexical arm (r18): the postings
   * checkpoint added this round truncates the final executed plan, so the
-  * ExplainMain after-dumps no longer show the corpus-side build. This main
+  * `Probe --explain` after-dumps no longer show the corpus-side build. This main
   * prints the PRE-checkpoint postings frame — the subtree where the corpus
   * token explode meets the broadcast query-term filter — exactly as
   * lexicalScored builds it. Usage:
@@ -15,12 +14,7 @@ object DumpLex139 {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val out = args(1)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build("8", Some("ERROR"))
     import graft.operators.TextOps
     import graft.functions.PortableHash.tokens
     val sb = new StringBuilder

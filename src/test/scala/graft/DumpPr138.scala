@@ -1,10 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Evidence dump for q138's CHANGED subtrees (VERDICT r17 #1/#6): the
-  * localCheckpoint in pageRank truncates lineage, so ExplainMain's dump of
+  * localCheckpoint in pageRank truncates lineage, so `Probe --explain`'s dump of
   * the final query shows only the post-checkpoint sort. This main drives the
   * PRODUCTION build helpers ([[graft.operators.Analytics.prEdgeFrames]] /
   * [[graft.operators.Analytics.prEdgeState]] / prIterStep) far enough to
@@ -17,12 +16,7 @@ object DumpPr138 {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val out = args(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build("32", Some("ERROR"))
     val sb = new StringBuilder
     val t0 = System.nanoTime()
     val n = SparkEntry.queries("q138_pagerank")(spark, dir).count()

@@ -500,6 +500,80 @@ class IncrementalReplaySpec extends SparkSpec {
     assert(snap() == batchTop, "a replayed micro-batch must be a merge no-op")
   }
 
+  /** Runs `f` with the session's `file:` filesystem replaced by
+    * [[StagingRenameFailsOnce]], armed: the first publish rename fails. */
+  private def withStagingRenameFailingOnce[A](f: => A): A = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val prev = Seq("fs.file.impl", "fs.file.impl.disable.cache").map(k => k -> Option(hc.get(k)))
+    hc.set("fs.file.impl", classOf[StagingRenameFailsOnce].getName)
+    hc.set("fs.file.impl.disable.cache", "true")
+    StagingRenameFailsOnce.armed.set(true)
+    try f finally {
+      StagingRenameFailsOnce.armed.set(false)
+      prev.foreach {
+        case (k, Some(v)) => hc.set(k, v)
+        case (k, None)    => hc.unset(k)
+      }
+    }
+  }
+
+  /** A crash between publishOver's two renames: the target is gone and
+    * its last generation sits at `target + ".old"`. */
+  private def crashBetweenRenames(target: String): Unit = {
+    java.nio.file.Files.move(java.nio.file.Paths.get(target),
+      java.nio.file.Paths.get(target + ".old"))
+    ()
+  }
+
+  private def sortedRows(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+
+  test("an upsert whose recovery publish fails again still recovers the aside generation") {
+    import graft.streaming.EventsStream
+    val root = java.nio.file.Files.createTempDirectory("inc_publish_upsert")
+    val events = Tables.events(spark, sf001)
+      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"), col("value"))
+    val gen1 = events.filter(col("event_id") % 2 === 0)
+    val batch = events.filter(col("event_id") % 2 === 1)
+    def upsert(target: String)(df: DataFrame): Unit =
+      EventsStream.upsertBatch(target, Seq("user_id", "event_type"),
+        Seq(col("ts").desc, col("event_id").desc))(df)
+    val target = root.resolve("archive").toString
+    upsert(target)(gen1)
+    crashBetweenRenames(target)
+    // the second crash: the recovery publish's staging rename fails
+    withStagingRenameFailingOnce {
+      intercept[java.io.IOException](upsert(target)(batch))
+    }
+    upsert(target)(batch)
+    val reference = root.resolve("reference").toString
+    upsert(reference)(gen1)
+    upsert(reference)(batch)
+    assert(sortedRows(target) == sortedRows(reference),
+      "generation 1's rows must survive a failed recovery publish")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(target + ".old")))
+  }
+
+  test("a q145 top-k merge after a crash between the renames keeps the aside's top-k rows") {
+    import graft.streaming.EventsStream
+    val root = java.nio.file.Files.createTempDirectory("inc_publish_topk")
+    val events = Tables.events(spark, sf001)
+      .select(col("event_type"), col("event_id"), col("user_id"), col("value"))
+    val gen1 = events.filter(col("event_id") % 2 === 0)
+    val batch = events.filter(col("event_id") % 2 === 1)
+    def merge(target: String)(df: DataFrame): Unit =
+      EventsStream.topkMergeBatch(target, EventsStream.TopkK)(df)
+    val target = root.resolve("board").toString
+    merge(target)(gen1)
+    crashBetweenRenames(target)
+    merge(target)(batch)
+    val reference = root.resolve("reference").toString
+    merge(reference)(gen1)
+    merge(reference)(batch)
+    assert(sortedRows(target) == sortedRows(reference),
+      "the merge must start from the aside generation's top-k")
+  }
+
   test("q162 streaming admission equals batch q159 across micro-batch boundaries") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -550,4 +624,17 @@ class IncrementalReplaySpec extends SparkSpec {
       case None    => spark.conf.unset(key)
     }
   }
+}
+
+/** Local filesystem whose next rename of a `*.staging` directory fails
+  * (returns false, as a failed rename does) while [[StagingRenameFailsOnce.armed]]
+  * is set, then disarms. */
+class StagingRenameFailsOnce extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    if (src.getName.endsWith(".staging") && StagingRenameFailsOnce.armed.getAndSet(false)) false
+    else super.rename(src, dst)
+}
+
+object StagingRenameFailsOnce {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
