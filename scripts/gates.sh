@@ -10,6 +10,9 @@
 #   verify     graft.Verify at sf0.01 into $OUT/vout
 #   oracle     scripts/check_oracle.py on that dump (DuckDB hash compare)
 #   planaudit  graft.PlanAudit: exit 1 on any MISSING/CHECK plan property
+#   stream     graft.Probe --stream --iso 2 over graft.Bench's streaming group
+#              at sf0.1; fails if any query's second pass compiles generated
+#              code (a restart must reuse what the first start compiled)
 #   bench      graft.Bench at sf0.1, three cold-JVM runs; a run fails on a
 #              non-zero exit or on errors_n > 0 in its trailing JSON line
 #              (bench_run<i>.txt).
@@ -29,7 +32,7 @@
 # (${TMPDIR:-/tmp}/graft_gates), and every Spark stage runs on
 # SPARK_GRAFT_CPUS cores (default: nproc).
 set -u
-STAGES=(tests verify oracle planaudit bench slope scale10 scale20)
+STAGES=(tests verify oracle planaudit stream bench slope scale10 scale20)
 if [ "${1:-}" = "--list" ]; then printf '%s\n' "${STAGES[@]}"; exit 0; fi
 
 cd "$(dirname "$0")/.." || exit 2
@@ -58,12 +61,30 @@ stage_bench() {
   return $rc
 }
 
+STREAM_GROUP=q50_stream_tumbling,q58_stream_join,q81_stream_sessions,\
+q110_stream_sliding_append,q119_stream_left_join,q123_stream_session_window,\
+q145_stream_topk,q162_stream_neardedup
+
+stage_stream() {
+  sbt -batch "Test/runMain graft.Probe $STREAM_GROUP --sf $DATA/sf0.1 --stream --iso 2" \
+    || return 1
+  # every query must print its pass-2 line, each with codegen.compiles=0
+  local want n bad
+  want=$(tr ',' '\n' <<< "$STREAM_GROUP" | wc -l)
+  n=$(grep -c '\[probe\] [^ ]* pass=2 .* codegen\.compiles=' "$OUT/stream.log")
+  bad=$(grep '\[probe\] [^ ]* pass=2 .* codegen\.compiles=' "$OUT/stream.log" \
+    | grep -v 'codegen\.compiles=0 ')
+  [ -n "$bad" ] && echo "$bad" >&2
+  [ "$n" -eq "$want" ] && [ -z "$bad" ]
+}
+
 run_stage() {
   case "$1" in
     tests)     sbt -batch test ;;
     verify)    sbt -batch "runMain graft.Verify $DATA/sf0.01 $OUT/vout" ;;
     oracle)    python3 scripts/check_oracle.py "$DATA/sf0.01" "$OUT/vout" ;;
     planaudit) sbt -batch "runMain graft.PlanAudit" ;;
+    stream)    stage_stream ;;
     bench)     stage_bench ;;
     slope)     sbt -batch "runMain graft.SlopeProbe" ;;
     scale10)   SPARK_GRAFT_SCALE_QUERIES=all sbt -batch "runMain graft.ScaleBench" ;;

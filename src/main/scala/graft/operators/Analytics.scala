@@ -149,6 +149,7 @@ object Analytics {
   def skewProfile(spark: SparkSession, dir: String): DataFrame = {
     val counts = Tables.orders(spark, dir)
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
+    // unpartitioned: both windows read the 20-row top-k of the 14,999 per-customer counts at sf0.1
     val wRank = Window.orderBy(col("n_orders").desc, col("o_custkey"))
     // rank FIRST and alone: a pure row_number window lets Spark push a
     // partial WindowGroupLimit below the shuffle (map-side top-20), and the
@@ -318,6 +319,7 @@ object Analytics {
     val cells = ev.select(explode(keys).as("k"))
       .groupBy(col("k.d").as("d"), col("k.bucket").as("bucket"))
       .agg(count(lit(1)).as("cell"))
+    // unpartitioned: reads the CmTopK (20) top-k of the 1,500 per-user counts at sf0.1
     val wRank = Window.orderBy(col("exact_n").desc, col("user_id"))
     val hh = ev.groupBy(col("user_id")).agg(count(lit(1)).as("exact_n"))
       .withColumn("hh_rank", row_number().over(wRank).cast("long"))

@@ -754,6 +754,7 @@ object Relational {
     */
   def movingAverage(spark: SparkSession, dir: String): DataFrame = {
     val daily = dateSpine(spark, dir).select(col("day"), col("n_orders"))
+    // unpartitioned: one row per day (2,405 at sf0.1); the date range, not the scale, sets it
     val byDay = Window.orderBy(col("epoch_day")).rangeBetween(-6, 0)
     daily
       .withColumn("epoch_day", datediff(col("day"), lit("1970-01-01").cast("date")).cast("long"))

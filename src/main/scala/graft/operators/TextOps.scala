@@ -2034,6 +2034,7 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     val d = Tables.documents(spark, dir)
     val key = h48(concat(col("text"), lit(":pick")))
+    // unpartitioned: reads the UniformSampleK (100) top-k of the 5,000 documents at sf0.1
     val w = Window.orderBy(col("pick_key"), col("doc_id"))
     d.select(col("doc_id"), col("lang"), col("n_chars"), key.as("pick_key"))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -2107,6 +2108,7 @@ object TextOps {
           .as("tok"),
         expr(s"doc_id DIV $PackBucketWidth").as("bucket"))
     val subtotals = base.groupBy(col("bucket")).agg(sum(col("tok")).as("btok"))
+    // unpartitioned: one row per 64-document bucket (79 at sf0.1), so it grows with the corpus
     val wOff = Window.orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = subtotals
@@ -2559,8 +2561,11 @@ object TextOps {
     // multi-tenant cluster session the old set/restore dance raced with
     // concurrent queries. The loop inputs are rebuilt against the clone:
     // the edge leaf is the already-materialized checkpoint RDD, so nothing
-    // recomputes.
+    // recomputes. The clone runs its tasks outside artifact isolation, so
+    // they reuse code earlier calls compiled (EventsStream.SharedCodegenCache).
     val loopSession = spark.newSession()
+    val (shareKey, shareValue) = graft.streaming.EventsStream.SharedCodegenCache
+    loopSession.conf.set(shareKey, shareValue)
     loopSession.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
     val pairsLoop = loopSession.createDataFrame(repPairs.rdd, repPairs.schema)
     val sLoop = loopSession.createDataFrame(s.rdd, s.schema)
@@ -2811,7 +2816,7 @@ object TextOps {
       .agg(sum(col("freq")).as("pair_count"))
       .orderBy(col("pair_count").desc, col("left_sym"), col("right_sym"))
       .limit(BpeTopK)
-    // rank window runs on the K collected survivors only (single tiny task)
+    // unpartitioned: the rank reads the BpeTopK (50) survivors of 95 symbol-pair counts at sf0.1
     val w = Window.orderBy(col("pair_count").desc, col("left_sym"), col("right_sym"))
     counts.withColumn("rank", row_number().over(w).cast("long"))
       .select(col("rank"), col("left_sym"), col("right_sym"), col("pair_count"))
@@ -3057,6 +3062,7 @@ object TextOps {
       .select(col("doc_id"), col("lang"), col("li"), col("gq"),
         (col("li") + col("gq")).as("gkey"))
       .orderBy(col("gkey").desc, col("doc_id")).limit(DsirK)
+    // unpartitioned: reads the DsirK (100) survivors of the 5,000 scored documents at sf0.1
     val w = Window.orderBy(col("gkey").desc, col("doc_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .select(col("rank"), col("doc_id"), col("lang"),

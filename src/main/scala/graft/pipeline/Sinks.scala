@@ -1,10 +1,11 @@
 package graft.pipeline
 
+import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import graft.fs.LocalFs
 import graft.functions.Formatters
 
@@ -39,8 +40,14 @@ object Sinks {
     * through [[graft.fs.LocalFs]]: on a `file:` archive the stock local
     * filesystem starts a `chmod` process for every file and directory it
     * creates, several per client directory.
+    *
+    * Each write also records the archived columns (`letters.schema`, no
+    * `client_dir`) in [[SchemaFile]] at the archive root, for
+    * [[readClientArchive]]. An archive holds one schema: a write with other
+    * columns into an existing archive leaves its older client directories
+    * unreadable as one table either way.
     */
-  def archiveLetters(letters: DataFrame, outDir: String): Unit =
+  def archiveLetters(letters: DataFrame, outDir: String): Unit = {
     letters
       .withColumn("client_dir", Formatters.sanitizeName(col("client_name")))
       .write
@@ -49,16 +56,29 @@ object Sinks {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("client_dir")
       .parquet(outDir)
+    val file = new Path(outDir, SchemaFile)
+    val out = file.getFileSystem(
+      LocalFs.hadoopConf(letters.sparkSession.sparkContext.hadoopConfiguration)).create(file, true)
+    try out.write(letters.schema.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** The archive's schema file. Its `_` prefix hides it from parquet reads
+    * of the archive. */
+  val SchemaFile = "_letters_schema.json"
 
   /** Read-back of one client's archive: only `<outDir>/client_dir=<value>`
     * is listed and read (`basePath` keeps `client_dir` a column), so the
     * cost does not grow with the number of archived clients — a read of the
     * whole archive lists every sibling directory, through a job of its own
     * once there are more than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` of them. A
-    * client with no letters has no directory and falls back to the filtered
-    * whole-archive read (an empty frame with the archive's schema), as does
-    * a value whose partition type would not infer as a string on its own (a
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` of them. The
+    * read takes its schema from the archive's [[SchemaFile]], with
+    * `client_dir` a string: inferring it instead runs a job over the
+    * directory's parquet footers, which was half of a one-client read's
+    * time. A client with no letters has no directory and falls back to the
+    * filtered whole-archive read (an empty frame with the archive's
+    * schema). So does an archive without a schema file (written before the
+    * file existed) when its value would not infer as a string on its own (a
     * numeric-looking name).
     */
   def readClientArchive(spark: SparkSession, outDir: String, client: String): DataFrame = {
@@ -70,12 +90,17 @@ object Sinks {
       .expressions.head.eval()).map(_.toString).filter(_.nonEmpty)
     val partDir = value.map(v => new Path(outDir,
       ExternalCatalogUtils.getPartitionPathString("client_dir", v)))
-    val exists = partDir.exists { p =>
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    if (!exists) wholeArchive
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!partDir.exists(fs.exists)) wholeArchive
     else {
-      val one = spark.read.option("basePath", outDir).parquet(partDir.get.toString)
+      val schemaFile = new Path(outDir, SchemaFile)
+      val reader = if (!fs.exists(schemaFile)) spark.read else {
+        val in = fs.open(schemaFile)
+        val json = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+        spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]
+          .add("client_dir", StringType))
+      }
+      val one = reader.option("basePath", outDir).parquet(partDir.get.toString)
       if (one.schema("client_dir").dataType != StringType) wholeArchive
       else one.filter(col("client_dir") === clientDir)
     }

@@ -83,11 +83,45 @@ object EventsStream {
     * local filesystem serves with a `readlink` process per rename and a
     * `chmod` process per file. Every streaming start of the engine
     * (EventsStream and DocsStream) goes through this scope.
+    *
+    * It also starts the query outside per-session artifact isolation
+    * ([[SharedCodegenCache]]), so a restart reuses the code an earlier
+    * start compiled.
     */
-  private[streaming] def withStatePartitions[T](spark: SparkSession)(f: => T): T =
+  private[streaming] def withStatePartitions[T](spark: SparkSession)(f: => T): T = {
+    org.apache.spark.sql.GraftBridge.settleArtifactIsolation(spark)
     graft.operators.Analytics.withSessionConf(spark)(
-      ("spark.sql.shuffle.partitions" -> statePartitions(spark).toString) +:
-        graft.fs.LocalFs.conf.toSeq: _*)(f)
+      Seq("spark.sql.shuffle.partitions" -> statePartitions(spark).toString,
+        SharedCodegenCache) ++ graft.fs.LocalFs.conf.toSeq: _*)(f)
+  }
+
+  /** The session conf that lets a derived session reuse compiled code.
+    *
+    * Spark keys its generated-code cache (`CodeGenerator.cache`) on the
+    * task thread's context class loader as well as the source text. Under
+    * artifact isolation (`spark.sql.artifact.isolation.enabled`, on by
+    * default) every session UUID gets its own job artifact state, and the
+    * executor runs that session's tasks under a class loader of its own.
+    * `writeStream.start()` runs the query in `cloneSession()`, a new UUID,
+    * so under isolation every start compiles its generated classes again,
+    * although their source is the same (stream-replay: 24 units in each
+    * warm pass). A derived session with isolation off shares the default
+    * artifact state, the default class loader and so the cache.
+    *
+    * Isolation buys the engine's derived sessions nothing: their plans run
+    * only engine classes, and the engine adds no session artifacts. It is
+    * set on the derived session only; the caller keeps its own isolation.
+    * Inside [[withStatePartitions]] the clone copies the conf, and the
+    * caller's setting is restored afterwards. A session's artifact manager
+    * reads the conf once, when it is built, and a session's first
+    * `cloneSession()` builds it; so the scope builds the caller's manager
+    * before it sets the conf, or a stream that is a session's first action
+    * would turn isolation off for that session for good. q62's loop session
+    * ([[graft.operators.TextOps]] `buildClusterLabels`) sets the conf at
+    * birth.
+    */
+  private[graft] val SharedCodegenCache: (String, String) =
+    "spark.sql.artifact.isolation.enabled" -> "false"
 
   case class Ev(user_id: Long, ts_us: Long)
   case class Sess(user_id: Long, start_us: Long, end_us: Long, n_events: Long)

@@ -20,6 +20,16 @@ object GraftBridge {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Build the session's artifact manager now, if it does not exist yet
+    * (`artifactManager` is `private[sql]`). The manager reads
+    * `spark.sql.artifact.isolation.enabled` once, when it is built — at the
+    * session's first query or its first `cloneSession()` — and keeps that
+    * choice for the session's life. */
+  def settleArtifactIsolation(spark: SparkSession): Unit = {
+    spark.sessionState.artifactManager
+    ()
+  }
+
   /** Register a function into an ALREADY-RUNNING session's registry
     * (`sessionState` is `private[sql]`). The cluster-submission path uses
     * `spark.sql.extensions` instead (see graft.plans.GraftExtensions);

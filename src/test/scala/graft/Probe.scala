@@ -3,7 +3,9 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
@@ -18,9 +20,12 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryPro
   *  - `--sf` defaults to `SPARK_GRAFT_SF_DIR`, `--cpus` to `SPARK_GRAFT_CPUS`
   *    (4); `--conf` sets session confs before the first query.
   *  - `--iso N` times N passes of each query, each after `clearCache` and a
-  *    `System.gc()`: `[probe] <q> pass=<i> <s> s rows=<n>`. The default is
-  *    one pass, or none when `--explain` is the only mode. Later passes are
-  *    the warm ones; only compare numbers taken at a quiet load average.
+  *    `System.gc()`: `[probe] <q> pass=<i> <s> s rows=<n> codegen.compiles=<k>
+  *    codegen.compile_ms=<ms>`, the last two the pass's generated-code cache
+  *    misses and their compile time (JVM-wide, so exact only when nothing
+  *    else runs). The default is one pass, or none when `--explain` is the
+  *    only mode. Later passes are the warm ones; only compare numbers taken
+  *    at a quiet load average.
   *  - `--explain DIR` runs each query once more and writes
   *    `DIR/<q>_<T>.txt` (`--tag`, default `before`): a header, `explain
   *    formatted`, and the AQE-final executed plan.
@@ -98,9 +103,15 @@ object Probe {
       (1 to o.passes).foreach { pass =>
         if (o.stream) log.drain()   // drop progress from earlier runs
         spark.catalog.clearCache(); System.gc()
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         val rows = fn(spark, o.sf).count()
-        emit(f"[probe] $q pass=$pass ${(System.nanoTime() - t0) / 1e9}%.3f s rows=$rows")
+        val secs = (System.nanoTime() - t0) / 1e9
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000
+        emit(f"[probe] $q pass=$pass $secs%.3f s rows=$rows codegen.compiles=$compiles " +
+          s"codegen.compile_ms=$compileMs")
         if (o.stream) {
           val ps = log.drain()
           val trigger = ps.flatMap(p => Option(p.durationMs.get("triggerExecution"))).map(_.toLong).sum

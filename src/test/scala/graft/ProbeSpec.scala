@@ -29,8 +29,8 @@ class ProbeSpec extends SparkSpec {
   test("--iso prints one timing line per pass") {
     val out = probe("q01_pricing_summary", "--sf", sf001, "--iso", "1")
     assert(out.size == 1, out)
-    assert(out.head.matches("""\[probe\] q01_pricing_summary pass=1 \d+\.\d{3} s rows=[1-9]\d*"""),
-      out.head)
+    assert(out.head.matches("""\[probe\] q01_pricing_summary pass=1 \d+\.\d{3} s rows=[1-9]\d* """ +
+      """codegen\.compiles=\d+ codegen\.compile_ms=\d+"""), out.head)
   }
 
   test("--explain writes the header, the formatted plan and the AQE-final plan") {
@@ -49,8 +49,8 @@ class ProbeSpec extends SparkSpec {
 
   test("--stream prints the pass's batch count and one line per micro-batch") {
     val out = probe("q50_stream_tumbling", "--sf", sf001, "--stream")
-    assert(out.head.matches("""\[probe\] q50_stream_tumbling pass=1 \d+\.\d{3} s rows=[1-9]\d*"""),
-      out)
+    assert(out.head.matches("""\[probe\] q50_stream_tumbling pass=1 \d+\.\d{3} s rows=[1-9]\d* """ +
+      """codegen\.compiles=\d+ codegen\.compile_ms=\d+"""), out)
     val summary = """\[probe\] q50_stream_tumbling pass=1 batches=(\d+) sum\(triggerExecution\)=\d+ms""".r
     val batches = out(1) match {
       case summary(n) => n.toInt

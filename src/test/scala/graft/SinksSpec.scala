@@ -27,6 +27,43 @@ class SinksSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == letters.count())
   }
 
+  test("one-client read-back takes the archive's recorded schema, with no inference job") {
+    val out = java.nio.file.Files.createTempDirectory("graft_archive_schema")
+    val letters = Letter.lettersPlane(spark, sf001)
+    val client = letters.select(col("client_name")).orderBy(col("client_name")).limit(1)
+      .collect()(0).getString(0)
+    val mine = letters.filter(col("client_name") === client)
+    Sinks.archiveLetters(mine, out.toString)
+    val expected = mine.collect().map(_.toString).sorted.toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(mine.columns.map(col): _*).collect().map(_.toString).sorted.toSeq
+    /** The frame `f` resolves and the Spark jobs resolving it ran. */
+    def jobsWhile(f: => org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+      }
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val df = f
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+        (df, jobs.get())
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (known, knownJobs) = jobsWhile(Sinks.readClientArchive(spark, out.toString, client))
+    assert(knownJobs == 0, "resolving the read must not infer the schema")
+    assert(rows(known) == expected && expected.nonEmpty)
+    // an archive without the schema file (written before it existed) infers
+    java.nio.file.Files.delete(out.resolve(Sinks.SchemaFile))
+    java.nio.file.Files.deleteIfExists(out.resolve(s".${Sinks.SchemaFile}.crc"))
+    val (inferred, inferJobs) = jobsWhile(Sinks.readClientArchive(spark, out.toString, client))
+    assert(inferJobs > 0)
+    assert(rows(inferred) == expected)
+    assert(inferred.schema == known.schema)
+  }
+
   test("delivery sink sends once per record; unconfigured transport is a no-op") {
     val letters = Letter.letters(spark, sf001)
     assert(Sinks.deliverLetters(letters, None) == 0L)
