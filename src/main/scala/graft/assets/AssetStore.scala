@@ -28,21 +28,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * below), so the layer trades a content scan it cannot afford at 100 TB
   * for that documented sliver.
   *
-  * Writes are write-to-temp + atomic rename with TWO integrity markers:
-  * `_SUCCESS` (completeness) and `_MANIFEST` (the artifact's own file
-  * inventory — name:length per data file). An artifact is only SERVED when
-  * both are present and the manifest matches what is on disk, so a
-  * tmp-cleanup daemon deleting individual part files (or any tampering
-  * that changes file sizes) is detected and the artifact rebuilt instead
-  * of silently changing query results. A crashed build leaves only an
-  * ignored temp dir, and a concurrent winner's artifact is adopted rather
-  * than clobbered (the publish re-checks completeness immediately before
-  * AND after the rename — Hadoop rename onto an existing directory moves
-  * the source INSIDE it, so a "successful" rename can still mean a lost
-  * race; see [[loadOrBuild]]).
+  * A build writes to a temp dir, adds `_MANIFEST` (the artifact's own
+  * file inventory — name:length per data file) beside Spark's `_SUCCESS`,
+  * and publishes through the engine's one crash-safe generation swap
+  * ([[graft.fs.Generations.publish]]): a crash leaves the old artifact or
+  * the new one, a corpse at the artifact path is set aside and replaced,
+  * and a concurrent winner's artifact is adopted rather than clobbered.
+  * An artifact is only SERVED when both markers are present and the
+  * manifest matches what is on disk ([[complete]]), so a tmp-cleanup
+  * daemon deleting individual part files (or any tampering that changes
+  * file sizes) is detected and the artifact rebuilt instead of silently
+  * changing query results. Completeness is re-checked right before the
+  * publish, so a builder that lost the race while building adopts the
+  * winner without a swap.
   *
   * The build's parquet write, the root mkdir, the markers and the publish
-  * rename go through the fork-free local filesystem ([[graft.fs.LocalFs]]):
+  * go through the fork-free local filesystem ([[graft.fs.LocalFs]]):
   * on a `file:` root the stock one starts a `chmod` process for every file
   * and directory it creates. Modes are unchanged — the root is still 0700.
   *
@@ -193,27 +194,28 @@ object AssetStore {
       .map(s => s"${s.getPath.getName}:${s.getLen}")
       .sorted.mkString("\n")
 
-  private def readSmall(fs: org.apache.hadoop.fs.FileSystem, p: Path): String = {
+  private def readText(fs: org.apache.hadoop.fs.FileSystem, p: Path): String = {
     val in = fs.open(p)
-    try {
-      val len = math.min(1L << 20, fs.getFileStatus(p).getLen).toInt
-      val b = new Array[Byte](len)
-      var off = 0
-      while (off < len) {
-        val n = in.read(b, off, len - off)
-        if (n < 0) return new String(b, 0, off, java.nio.charset.StandardCharsets.UTF_8)
-        off += n
-      }
-      new String(b, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
   }
 
-  private def writeSmall(fs: org.apache.hadoop.fs.FileSystem, p: Path,
+  private def writeText(fs: org.apache.hadoop.fs.FileSystem, p: Path,
       text: String): Unit = {
     val out = fs.create(p, true)
-    out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
+
+  /** A servable artifact: the marker is present AND the on-disk inventory
+    * still matches the published manifest. A `_SUCCESS` that survived a tmp
+    * reaper eating part files (or any size-changing tamper) is NOT a
+    * servable artifact — rebuild instead of silently changing results. */
+  private[graft] def complete(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Boolean =
+    fs.exists(new Path(dir, graft.fs.Generations.Marker)) && {
+      val m = new Path(dir, "_MANIFEST")
+      fs.exists(m) && readText(fs, m) == manifestOf(fs, dir)
+    }
 
   /** The load-or-build seam. With persistence enabled, returns a plain
     * parquet scan of the artifact — building (and atomically publishing) it
@@ -243,53 +245,23 @@ object AssetStore {
         if (!fs.exists(rootPath))
           fs.mkdirs(rootPath,
             org.apache.hadoop.fs.permission.FsPermission.createImmutable(0x1c0)) // 0700
-        // complete = the marker is present AND the on-disk inventory still
-        // matches the published manifest: a _SUCCESS that survived a tmp
-        // reaper eating part files (or any size-changing tamper) is NOT a
-        // servable artifact — rebuild instead of silently changing results
-        def complete =
-          fs.exists(new Path(path, "_SUCCESS")) && {
-            val m = new Path(path, "_MANIFEST")
-            fs.exists(m) && readSmall(fs, m) == manifestOf(fs, path)
-          }
-        if (!complete) timedBuild {
+        if (!complete(fs, path)) timedBuild {
           val tmp = new Path(root,
             s"$sig/.${tag}_v$version.tmp-${java.util.UUID.randomUUID}")
           build.write.options(graft.fs.LocalFs.conf).mode("overwrite")
             .parquet(tmp.toString)
-          writeSmall(fs, new Path(tmp, "_MANIFEST"), manifestOf(fs, tmp))
-          // Publish. Hadoop rename(tmp, path) onto an EXISTING directory
-          // "succeeds" by moving tmp INSIDE path, so a rename returning
-          // true is not proof of a win — completeness is re-checked right
-          // before the rename (cheap loss: a concurrent winner published
-          // while we built) and the landing is verified right after (the
-          // narrow race where the winner published between those checks).
-          if (complete) {
-            fs.delete(tmp, true) // lost while building: adopt the winner
-          } else {
-            // an artifact dir failing the completeness check is a corpse
-            // (crashed manual copy / reaped part files); clear it rather
-            // than failing the rename forever
-            if (fs.exists(path)) fs.delete(path, true)
-            val renamed = fs.rename(tmp, path)
-            val nested = new Path(path, tmp.getName)
-            if (renamed && !fs.exists(nested)) {
-              buildCount.incrementAndGet()
-              // retention is best-effort policy, parsed defensively: a
-              // retention-policy typo must never fail a query whose
-              // artifact just published successfully (ADVICE r16)
-              val pruneOff = spark.conf.getOption("graft.assets.prune")
-                .exists(_.trim.equalsIgnoreCase("false"))
-              if (!pruneOff) markAndPrune(fs, rootPath, sig, dir)
-            } else {
-              // lost the race: either rename failed outright, or it
-              // "succeeded" into the winner's published dir — remove our
-              // stray tmp from inside it and adopt the winner
-              if (renamed && fs.exists(nested)) fs.delete(nested, true)
-              else fs.delete(tmp, true)
-              require(complete,
-                s"asset publish failed and no complete artifact at $path")
-            }
+          writeText(fs, new Path(tmp, "_MANIFEST"), manifestOf(fs, tmp))
+          // a concurrent builder that published while this one built wins
+          // (here, or inside the swap): adopt its artifact
+          if (complete(fs, path)) fs.delete(tmp, true)
+          else if (graft.fs.Generations.publish(fs, tmp, path)) {
+            buildCount.incrementAndGet()
+            // retention is best-effort policy, parsed defensively: a
+            // retention-policy typo must never fail a query whose
+            // artifact just published successfully (ADVICE r16)
+            val pruneOff = spark.conf.getOption("graft.assets.prune")
+              .exists(_.trim.equalsIgnoreCase("false"))
+            if (!pruneOff) markAndPrune(fs, rootPath, sig, dir)
           }
         }
         spark.read.parquet(path.toString)
@@ -311,23 +283,12 @@ object AssetStore {
       sig: String, dir: String): Unit = {
     try {
       val marker = new Path(root, s"$sig/_CORPUS")
-      if (!fs.exists(marker)) {
-        val out = fs.create(marker, true)
-        out.write(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        out.close()
-      }
+      if (!fs.exists(marker)) writeText(fs, marker, dir)
       fs.listStatus(root).filter(_.isDirectory).foreach { s =>
         val other = s.getPath.getName
         if (other != sig) {
           val m = new Path(s.getPath, "_CORPUS")
-          if (fs.exists(m)) {
-            val in = fs.open(m)
-            val b = new Array[Byte](math.min(65536L, fs.getFileStatus(m).getLen).toInt)
-            val n = in.read(b); in.close()
-            if (n > 0 && new String(b, 0, n,
-                java.nio.charset.StandardCharsets.UTF_8) == dir)
-              fs.delete(s.getPath, true)
-          }
+          if (fs.exists(m) && readText(fs, m) == dir) fs.delete(s.getPath, true)
         }
       }
     } catch {

@@ -483,6 +483,8 @@ object Analytics {
   /** q138 iteration count / fixed-point mass — shared by the Spark loop and
     * the generated oracle CTEs so the two sides can never disagree. */
   val PrIters = 8
+  /** q138 checkpoints the rank every this many iterations (see [[pageRank]]). */
+  val PrCkptEvery = 4
   val PrScale = 1000000000000L // 1e12: total rank mass in fixed-point longs
 
   /** q138: PageRank over the customer↔supplier trade graph — the iterative
@@ -553,8 +555,8 @@ object Analytics {
     * width). The caller must free the pair checkpoint once the edge frame
     * is materialized.
     *
-    * The width (conf `graft.pr.parts`) is derived from the MEASURED pair
-    * count the same way AQE sizes coalesced partitions — edge bytes over
+    * The width is derived from the MEASURED pair count the same way AQE
+    * sizes coalesced partitions — edge bytes over
     * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, clamped to the
     * cluster's default parallelism — because the checkpoint boundary is
     * exactly where AQE's own sizing cannot reach (guide §2: derive
@@ -582,9 +584,8 @@ object Analytics {
     // (pure size-derived) at 4.6 s vs 3.2 s at the floor of 4, with the
     // curve flat from 4 to 8 and the session default (32) back at 4.5+ s.
     val defPar = spark.sparkContext.defaultParallelism.toLong
-    val derived = math.max(math.min(defPar, 4L), math.min(defPar,
+    val parts = math.max(math.min(defPar, 4L), math.min(defPar,
       (2L * nPairs * 32L + advisory - 1L) / advisory)).toInt
-    val parts = graft.GraftConf.int(spark, "graft.pr.parts", derived)
     // Both edge directions from ONE pass over the distinct pairs (explode of
     // a 2-struct array), not a self-union (the r17 lesson: the union's two
     // branches re-ran the distinct's reduce-side aggregate). The explicit
@@ -645,20 +646,9 @@ object Analytics {
     // materialization per step. Since r18 the edge side of every iteration
     // in a block is the bare checkpoint scan (no exchange, no sort — see
     // prNoAqe), so the block's only exchanges are the node-sized rank
-    // aggregates. Conf `graft.pr.ckptEvery` tunes the block size; 4 was the
-    // r15 measured optimum and r18 re-measured 8 no better (one deep block
-    // re-plans a larger join tree than it saves in checkpoints).
-    val ckptEvery = spark.conf.getOption("graft.pr.ckptEvery")
-      .map { v =>
-        val n = try v.toInt catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"graft.pr.ckptEvery must be a positive integer, got '$v'") }
-        // 0 would divide-by-zero the block test; a negative value would
-        // silently disable every intermediate checkpoint (unbounded lineage
-        // — the exact concern this block size exists to bound)
-        require(n >= 1, s"graft.pr.ckptEvery must be >= 1, got $n")
-        n
-      }.getOrElse(4)
+    // aggregates. The block size [[PrCkptEvery]] is the r15 measured
+    // optimum; r18 re-measured 8 no better (one deep block re-plans a
+    // larger join tree than it saves in checkpoints).
     // The iteration blocks EXECUTE (at their block-end checkpoints) with the
     // session shuffle width lowered to the edge state's pinned width: every
     // rank aggregate's exchange is then born hash(dst, parts), which is
@@ -671,7 +661,7 @@ object Analytics {
     withSessionConf(spark)("spark.sql.shuffle.partitions" -> parts.toString) {
       for (k <- 1 to PrIters) {
         val it = prIterStep(edgesDeg, rank, base)
-        rank = if (k % ckptEvery == 0 || k == PrIters) it.localCheckpoint() else it
+        rank = if (k % PrCkptEvery == 0 || k == PrIters) it.localCheckpoint() else it
       }
     }
     rank.select(col("node"), col("rank").as("rank_fp"),

@@ -894,6 +894,10 @@ object Relational {
     * 12 keeps every digit of the reference's name format in the key. */
   val FuzzyWindow = 12
 
+  /** q107's hot-variant cap: a blocking key carried by more customers is
+    * dropped whole (see [[fuzzyCandidates]]). */
+  val FuzzyMaxBlock = 64
+
   /** q107: blocked fuzzy matching (record linkage) — candidate pairs come
     * from an equality join on deletion-neighborhood blocking keys, then
     * exact edit-distance ≤ 2 on the name decides the match (nation/segment
@@ -924,9 +928,9 @@ object Relational {
     * name plus nation and segment, carrying both names for verification.
     *
     * Hot-variant cap (the q102 lever applied to blocking): a variant block
-    * carried by more than `graft.fuzzy.maxBlock` customers (default 64)
-    * contributes O(df²) candidate pairs but almost no recall — names within
-    * edit distance ≤2 share MANY deletion variants, so true pairs co-occur
+    * carried by more than [[FuzzyMaxBlock]] customers contributes O(df²)
+    * candidate pairs but almost no recall — names within edit distance ≤2
+    * share MANY deletion variants, so true pairs co-occur
     * in the rarer ones, while oversize blocks are boilerplate names ("LLC",
     * "Trust") whose pairs the verifier would reject anyway. The cap is a
     * partial WindowGroupLimit on the uniform block key: every map partition
@@ -938,11 +942,9 @@ object Relational {
     * so the default cap provably does not change the oracle-checked output.
     */
   def fuzzyCandidates(spark: SparkSession, dir: String): DataFrame = {
-    val maxBlock = graft.GraftConf.int(spark, "graft.fuzzy.maxBlock", 64)
-    val window = graft.GraftConf.int(spark, "graft.fuzzy.window", FuzzyWindow)
     fuzzyCandidatesOf(Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"), col("c_mktsegment")),
-      maxBlock, window)
+      FuzzyMaxBlock, FuzzyWindow)
   }
 
   /** Core of q107 over an arbitrary (c_custkey, c_name, c_nationkey,

@@ -59,8 +59,7 @@ object SimilarityOps {
     * so the default cap is provably inactive there. At real scale the cap is
     * the skew guard, not the growth guard — keep occupancy constant by
     * scaling band width as log2(n): `graft.lsh.bandBits` (default
-    * [[BandBits]], pinned by the oracle) is that lever, and
-    * `graft.lsh.maxBucket` overrides the cap.
+    * [[BandBits]], pinned by the oracle) is that lever.
     */
   val MaxBucket = 32
 
@@ -87,16 +86,15 @@ object SimilarityOps {
     }
   }
 
-  /** The session-resolved (bandBits, maxBucket) pair — ONE resolution point
-    * shared by the production candidate path ([[lshCandidates]]) and the
-    * oracle SQL builder ([[bandsCteSql]]), so an oracle dump run with either
-    * conf set compares against the SAME semantics the Spark plan executed
-    * (previously the oracle hard-coded the defaults — a conf'd comparison
+  /** The session-resolved band width — ONE resolution point shared by the
+    * production candidate path ([[lshCandidates]]) and the oracle SQL
+    * builder ([[bandsCteSql]]), so an oracle dump run with the conf set
+    * compares against the SAME semantics the Spark plan executed
+    * (previously the oracle hard-coded the default — a conf'd comparison
     * run would have silently diverged).
     */
-  private def resolvedLshConf(spark: SparkSession): (Int, Int) =
-    (graft.GraftConf.int(spark, "graft.lsh.bandBits", BandBits),
-     graft.GraftConf.int(spark, "graft.lsh.maxBucket", MaxBucket))
+  private def resolvedBandBits(spark: SparkSession): Int =
+    graft.GraftConf.int(spark, "graft.lsh.bandBits", BandBits)
 
   /** Sequential left-fold dot product (same op order as the oracle) — the
     * native codegen'd [[graft.functions.DotProduct]], proven value-identical
@@ -156,8 +154,7 @@ object SimilarityOps {
     * verification join, so candidate generation never moves payloads.
     */
   def lshCandidates(spark: SparkSession, dir: String): DataFrame = {
-    val (bandBits, maxBucket) = resolvedLshConf(spark)
-    lshCandidatesOf(vectors(spark, dir), bandBits, maxBucket)
+    lshCandidatesOf(vectors(spark, dir), resolvedBandBits(spark), MaxBucket)
   }
 
   /** Core of the banded candidate generation over an arbitrary (vec_id, v)
@@ -778,15 +775,15 @@ object SimilarityOps {
   /** The `bands` CTE (one row per vector × band) plus the `cand` CTE of
     * distinct pairs sharing ≥1 band — the oracle twin of [[lshCandidates]].
     * Append after [[vectorsCteSql]]. Renders with the SESSION-resolved
-    * `graft.lsh.bandBits` / `graft.lsh.maxBucket` (falling back to the
-    * defaults when no session is active), so the oracle twin tracks the
+    * `graft.lsh.bandBits` (falling back to the
+    * default when no session is active), so the oracle twin tracks the
     * production path under conf overrides instead of silently comparing
     * different semantics.
     */
   def bandsCteSql: String = {
-    val (bandBits, maxBucket) = SparkSession.getActiveSession
+    val bandBits = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
-      .map(resolvedLshConf).getOrElse((BandBits, MaxBucket))
+      .map(resolvedBandBits).getOrElse(BandBits)
     val perBand = (0 until Bands).map { b =>
       val v = (0 until bandBits).map { j =>
         s"(CASE WHEN ${dotSql("v", bandPlaneSqlList(b * bandBits + j))} >= 0 THEN (CAST(1 AS BIGINT) << $j) ELSE 0 END)"
@@ -801,7 +798,7 @@ object SimilarityOps {
        |    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.vec_id < b.vec_id
        |  JOIN bandsz s
        |    ON s.band_idx = a.band_idx AND s.band_val = a.band_val
-       |  WHERE s.bdf <= $maxBucket
+       |  WHERE s.bdf <= $MaxBucket
        |  GROUP BY 1, 2)""".stripMargin
   }
 

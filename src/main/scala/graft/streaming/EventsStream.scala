@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -407,6 +408,52 @@ object EventsStream {
       .orderBy(col("click_id"), col("buy_id").asc_nulls_first)
   }
 
+  /** Keyed newest-wins merge of one micro-batch into a parquet target —
+    * the ONE upsert implementation q23's archive sink, q132's sketch sink,
+    * and the replay specs all share. `newestFirst` orders candidates per
+    * key (rank 1 survives). The target's last generation is read through
+    * [[graft.fs.Generations.current]] and the merge replaces it through
+    * [[graft.fs.Generations.publish]], the engine's one crash-safe publish
+    * (see [[mergeGeneration]]).
+    */
+  private[graft] def upsertBatch(target: String, keys: Seq[String],
+      newestFirst: Seq[org.apache.spark.sql.Column],
+      wrapFs: FileSystem => FileSystem = identity)(batch: DataFrame): Unit = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(newestFirst: _*)
+    mergeGeneration(target, batch, wrapFs)(
+      _.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn"))
+  }
+
+  /** Publishes `merge(last ∪ batch)` as the next generation of `target`,
+    * where `last` is the generation [[graft.fs.Generations.current]] finds
+    * (the target, else the aside a crash between the swap's two renames
+    * leaves, else an empty frame of the batch's schema — an `exists`
+    * probe, never a failed read). The merge reads the live target, so it is
+    * written to a staging dir and swapped in by
+    * [[graft.fs.Generations.publish]] (an in-place overwrite would clobber
+    * its own input mid-scan); a crash at any point leaves the previous
+    * generation or the new one for the next batch to read. A production
+    * deployment gets true atomicity from a transactional table format, as
+    * the q132 scaladoc documents. `wrapFs` wraps the publish filesystem
+    * (the specs' fault injector).
+    */
+  private def mergeGeneration(target: String, batch: DataFrame,
+      wrapFs: FileSystem => FileSystem)(merge: DataFrame => DataFrame): Unit = {
+    val sp = batch.sparkSession
+    val t = new Path(target)
+    val fs = wrapFs(t.getFileSystem(
+      graft.fs.LocalFs.hadoopConf(sp.sparkContext.hadoopConfiguration)))
+    val last = graft.fs.Generations.current(fs, t).fold(
+      sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema))(
+      p => sp.read.parquet(p.toString))
+    val staging = t.suffix(".staging")
+    merge(last.unionByName(batch))
+      .write.options(graft.fs.LocalFs.conf).mode("overwrite").parquet(staging.toString)
+    if (!graft.fs.Generations.publish(fs, staging, t))
+      throw new java.io.IOException(s"a concurrent writer replaced $target")
+  }
+
   /** `foreachBatch` upsert sink — the reference's overwrite-by-name archive
     * semantics (report_generator.py:64-68: regenerating a letter replaces the
     * file with the same name) as a streaming merge: each micro-batch is
@@ -420,86 +467,6 @@ object EventsStream {
     * the batch latest-per-key plan (q23); not oracle-declared (side-effecting
     * sink, not a query).
     */
-  /** Keyed newest-wins merge of one micro-batch into a parquet target —
-    * the ONE upsert implementation q23's archive sink, q132's sketch sink,
-    * and the replay specs all share. `newestFirst` orders candidates per
-    * key (rank 1 survives); the merge reads the live target, so the write
-    * goes through a staging dir (an in-place overwrite would clobber its
-    * own input mid-scan).
-    *
-    * The live target is read through [[lastGeneration]].
-    */
-  private[graft] def upsertBatch(target: String, keys: Seq[String],
-      newestFirst: Seq[org.apache.spark.sql.Column])(batch: DataFrame): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val sp = batch.sparkSession
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(newestFirst: _*)
-    val merged = lastGeneration(sp, target, batch.schema).unionByName(batch)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-    publishOver(sp, merged, target)
-  }
-
-  /** The last generation [[publishOver]] published at `target`: the target
-    * itself, else the `target + ".old"` aside a crash between publishOver's
-    * two renames leaves, else (nothing published yet) an empty frame of
-    * `schema`. Only the analysis-time "no data there" failure
-    * (`AnalysisException`) falls through: swallowing, say, a transient IO
-    * error as "empty" would let the next overwrite erase every
-    * previously-published row (the silent-archive-reset class).
-    */
-  private def lastGeneration(sp: SparkSession, target: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    def read(path: String)(orElse: => DataFrame): DataFrame =
-      try sp.read.parquet(path)
-      catch { case _: org.apache.spark.sql.AnalysisException => orElse }
-    read(target)(read(target + ".old")(
-      sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)))
-  }
-
-  /** Publish `merged` over `target` when the plan READS the live target:
-    * write to a staging dir, then swap it into place with one filesystem
-    * rename (an in-place overwrite would clobber its own input mid-scan).
-    * The swap replaces the previous shape's second full write + read-back
-    * (staging → re-read → rewrite target), which paid an extra parquet
-    * round-trip of the whole table EVERY micro-batch — pure sink overhead
-    * at any scale (guide §1.2: remove passes that recompute what already
-    * exists). The previous generation is renamed ASIDE (never deleted
-    * before the swap lands — ADVICE r17): a crash between the two renames
-    * leaves a readable `target + ".old"` generation instead of NO target,
-    * which the next run's empty-archive fallback would have silently
-    * re-seeded as empty (the round-9 silent-archive-reset class, reachable
-    * across process restarts under delete-then-rename). A production
-    * deployment gets true atomicity from a transactional table format, as
-    * the q132 scaladoc already documents.
-    */
-  private def publishOver(sp: SparkSession, merged: DataFrame, target: String): Unit = {
-    val staging = target + ".staging"
-    merged.write.options(graft.fs.LocalFs.conf).mode("overwrite").parquet(staging)
-    val conf = sp.sparkContext.hadoopConfiguration
-    val tPath = new org.apache.hadoop.fs.Path(target)
-    val sPath = new org.apache.hadoop.fs.Path(staging)
-    val aside = new org.apache.hadoop.fs.Path(target + ".old")
-    val fs = tPath.getFileSystem(conf)
-    val hadPrev = fs.exists(tPath)
-    // With a live target, an aside is a stale generation: clear it so the
-    // target can move there. With no target, the aside IS the last
-    // generation (a crash between the two renames) and stays readable
-    // until the new generation has landed.
-    if (hadPrev) {
-      if (fs.exists(aside)) fs.delete(aside, true)
-      if (!fs.rename(tPath, aside))
-        throw new java.io.IOException(s"failed to set aside $target")
-    }
-    if (!fs.rename(sPath, tPath)) {
-      // put the previous generation back before failing — the caller must
-      // never observe a missing target with a live staging dir
-      if (hadPrev) fs.rename(aside, tPath)
-      throw new java.io.IOException(s"failed to publish $staging over $target")
-    }
-    fs.delete(aside, true)
-  }
-
   def foreachBatchUpsert(spark: SparkSession, dir: String, targetDir: String): DataFrame = {
     val stream = Tables.eventsStream(spark, dir)
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"), col("value"))
@@ -708,19 +675,17 @@ object EventsStream {
     * micro-batch a no-op (idempotent under at-least-once redelivery, the
     * same contract as [[upsertBatch]]'s newest-wins).
     */
-  private[graft] def topkMergeBatch(target: String, k: Int)(batch: DataFrame): Unit = {
+  private[graft] def topkMergeBatch(target: String, k: Int,
+      wrapFs: FileSystem => FileSystem = identity)(batch: DataFrame): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val sp = batch.sparkSession
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("value").desc, col("event_id"))
     val batchTop = batch.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-    val merged = lastGeneration(sp, target, batchTop.schema)
-      .unionByName(batchTop).drop("rank")
-      .dropDuplicates("event_id")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-    publishOver(sp, merged, target)
+    mergeGeneration(target, batchTop, wrapFs)(
+      _.drop("rank").dropDuplicates("event_id")
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k))
   }
 
   /** q145: streaming top-k — the per-event_type top-[[TopkK]] events by

@@ -186,6 +186,28 @@ class AssetStoreSpec extends SparkSpec {
     assert(again.toSeq == orig.toSeq && again.nonEmpty)
   }
 
+  test("a manifest over 1 MiB still matches its artifact") {
+    // a manifest line is name:length; a few thousand part files with long
+    // names put the manifest past 1 MiB (at ~70 bytes a line, an asset of
+    // ~15,000 parts gets there)
+    val dir = Files.createTempDirectory("graft_big_manifest")
+    val stem = "part-" + "x" * 220
+    val names = (0 until 4400).map(i => f"$stem-$i%05d.snappy.parquet")
+    names.foreach(n => Files.createFile(dir.resolve(n)))
+    Files.createFile(dir.resolve("_SUCCESS"))
+    val manifest = names.sorted.map(n => s"$n:0").mkString("\n")
+    assert(manifest.length > (1 << 20), s"vacuous: manifest of ${manifest.length} bytes")
+    Files.write(dir.resolve("_MANIFEST"),
+      manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val path = new org.apache.hadoop.fs.Path(dir.toString)
+    val fs = path.getFileSystem(
+      graft.fs.LocalFs.hadoopConf(spark.sparkContext.hadoopConfiguration))
+    assert(AssetStore.complete(fs, path), "a complete artifact with a large manifest must be served")
+    // and a mismatch past the first MiB is still detected
+    Files.write(dir.resolve(names.max), Array[Byte](1))
+    assert(!AssetStore.complete(fs, path))
+  }
+
   test("build time is exclusive: a nested build is not counted again in its parent") {
     val s = spark.newSession()
     s.conf.set(AssetStore.DirConf, Files.createTempDirectory("graft_assets_nested").toString)

@@ -23,7 +23,7 @@ object DumpPr138 {
     sb ++= f"== q138_pagerank full run: ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$n ==%n%n"
     import graft.operators.Analytics
     val (_, edgesDegFrame, parts) = Analytics.prEdgeFrames(spark, dir)
-    sb ++= s"== pinned edge width (graft.pr.parts derived) = $parts ==\n"
+    sb ++= s"== pinned edge width (size-derived) = $parts ==\n"
     sb ++= "== edge-build phase (pre-checkpoint) explain(formatted) ==\n"
     sb ++= edgesDegFrame.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode) + "\n"

@@ -1,7 +1,7 @@
 package graft
 
 /** The validated conf-parse seam: strategy confs fail LOUDLY with the conf
-  * name on a typo (the q138 ckptEvery discipline, repo-wide), defaults
+  * name on a typo, defaults
   * apply when unset, and valid values — including the deliberate
   * 0-forces-a-path harness levers — parse unchanged.
   */
@@ -37,8 +37,8 @@ class GraftConfSpec extends SparkSpec {
     // the pre-helper behavior was a raw NumberFormatException("For input
     // string: ...") with no pointer to WHICH session conf was wrong
     val e = intercept[IllegalArgumentException](
-      withConf("graft.fuzzy.maxBlock", "sixty-four")(
-        SparkEntry.queries("q107_fuzzy_match")(spark, sf001).collect()))
-    assert(e.getMessage.contains("graft.fuzzy.maxBlock"))
+      withConf("graft.lsh.bandBits", "sixteen")(
+        SparkEntry.queries("q41_lsh_neardup")(spark, sf001).collect()))
+    assert(e.getMessage.contains("graft.lsh.bandBits"))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.EventOps
@@ -500,25 +501,8 @@ class IncrementalReplaySpec extends SparkSpec {
     assert(snap() == batchTop, "a replayed micro-batch must be a merge no-op")
   }
 
-  /** Runs `f` with the session's `file:` filesystem replaced by
-    * [[StagingRenameFailsOnce]], armed: the first publish rename fails. */
-  private def withStagingRenameFailingOnce[A](f: => A): A = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    val prev = Seq("fs.file.impl", "fs.file.impl.disable.cache").map(k => k -> Option(hc.get(k)))
-    hc.set("fs.file.impl", classOf[StagingRenameFailsOnce].getName)
-    hc.set("fs.file.impl.disable.cache", "true")
-    StagingRenameFailsOnce.armed.set(true)
-    try f finally {
-      StagingRenameFailsOnce.armed.set(false)
-      prev.foreach {
-        case (k, Some(v)) => hc.set(k, v)
-        case (k, None)    => hc.unset(k)
-      }
-    }
-  }
-
-  /** A crash between publishOver's two renames: the target is gone and
-    * its last generation sits at `target + ".old"`. */
+  /** A crash between the publish's two renames (`graft.fs.Generations`):
+    * the target is gone and its last generation sits at `target + ".old"`. */
   private def crashBetweenRenames(target: String): Unit = {
     java.nio.file.Files.move(java.nio.file.Paths.get(target),
       java.nio.file.Paths.get(target + ".old"))
@@ -535,16 +519,16 @@ class IncrementalReplaySpec extends SparkSpec {
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"), col("value"))
     val gen1 = events.filter(col("event_id") % 2 === 0)
     val batch = events.filter(col("event_id") % 2 === 1)
-    def upsert(target: String)(df: DataFrame): Unit =
+    def upsert(target: String, wrapFs: FileSystem => FileSystem = identity)(df: DataFrame): Unit =
       EventsStream.upsertBatch(target, Seq("user_id", "event_type"),
-        Seq(col("ts").desc, col("event_id").desc))(df)
+        Seq(col("ts").desc, col("event_id").desc), wrapFs)(df)
     val target = root.resolve("archive").toString
     upsert(target)(gen1)
     crashBetweenRenames(target)
-    // the second crash: the recovery publish's staging rename fails
-    withStagingRenameFailingOnce {
-      intercept[java.io.IOException](upsert(target)(batch))
-    }
+    // the second crash: the recovery publish's staging rename (its first
+    // mutating operation, as no target is live) fails
+    intercept[java.io.IOException](
+      upsert(target, FaultyFs.at(FaultyFs.ReturnFalse, 1))(batch))
     upsert(target)(batch)
     val reference = root.resolve("reference").toString
     upsert(reference)(gen1)
@@ -572,6 +556,55 @@ class IncrementalReplaySpec extends SparkSpec {
     merge(reference)(batch)
     assert(sortedRows(target) == sortedRows(reference),
       "the merge must start from the aside generation's top-k")
+  }
+
+  test("a first q145 top-k merge into a fresh target logs no failed metadata-directory read") {
+    // the last generation is found by an exists probe, not by resolving a
+    // parquet read of a target (or aside) that does not exist yet: each
+    // such failed resolution logs FileStreamSink's "Assume no metadata
+    // directory" warning with a full FileNotFoundException stack trace
+    import graft.streaming.EventsStream
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val messages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-publish-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = messages.add(e.getMessage.getFormattedMessage)
+    }
+    def metadataWarnings: Int = {
+      val it = messages.iterator()
+      var n = 0
+      while (it.hasNext) if (it.next().contains("Assume no metadata directory")) n += 1
+      n
+    }
+    // the session first: its start (re)configures logging, which would
+    // drop an appender added before it
+    val events = Tables.events(spark, sf001)
+      .select(col("event_type"), col("event_id"), col("user_id"), col("value"))
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rootLogger = ctx.getConfiguration.getRootLogger
+    appender.start()
+    rootLogger.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      val root = java.nio.file.Files.createTempDirectory("inc_topk_fresh")
+      // control: the appender sees the warning a failed resolution logs
+      intercept[org.apache.spark.sql.AnalysisException](
+        spark.read.parquet(root.resolve("missing").toString))
+      assert(metadataWarnings > 0, "vacuous: the failed read's warning was not captured")
+      messages.clear()
+      val target = root.resolve("board").toString
+      EventsStream.topkMergeBatch(target, EventsStream.TopkK)(events)
+      assert(spark.read.parquet(target).count() > 0)
+      assert(metadataWarnings == 0,
+        s"a first merge resolved a missing generation: ${messages.toArray.mkString(" | ")}")
+    } finally {
+      rootLogger.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
   }
 
   test("q162 streaming admission equals batch q159 across micro-batch boundaries") {
@@ -624,17 +657,4 @@ class IncrementalReplaySpec extends SparkSpec {
       case None    => spark.conf.unset(key)
     }
   }
-}
-
-/** Local filesystem whose next rename of a `*.staging` directory fails
-  * (returns false, as a failed rename does) while [[StagingRenameFailsOnce.armed]]
-  * is set, then disarms. */
-class StagingRenameFailsOnce extends org.apache.hadoop.fs.LocalFileSystem {
-  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
-    if (src.getName.endsWith(".staging") && StagingRenameFailsOnce.armed.getAndSet(false)) false
-    else super.rename(src, dst)
-}
-
-object StagingRenameFailsOnce {
-  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
