@@ -32,8 +32,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * file inventory — name:length per data file) beside Spark's `_SUCCESS`,
   * and publishes through the engine's one crash-safe generation swap
   * ([[graft.fs.Generations.publish]]): a crash leaves the old artifact or
-  * the new one, a corpse at the artifact path is set aside and replaced,
-  * and a concurrent winner's artifact is adopted rather than clobbered.
+  * the new one, a corpse at the artifact path is replaced, and a
+  * concurrent winner's artifact is adopted rather than clobbered.
   * An artifact is only SERVED when both markers are present and the
   * manifest matches what is on disk ([[complete]]), so a tmp-cleanup
   * daemon deleting individual part files (or any tampering that changes
@@ -245,7 +245,12 @@ object AssetStore {
         if (!fs.exists(rootPath))
           fs.mkdirs(rootPath,
             org.apache.hadoop.fs.permission.FsPermission.createImmutable(0x1c0)) // 0700
-        if (!complete(fs, path)) timedBuild {
+        if (complete(fs, path)) {
+          // a crash after a publish's swap leaves the previous generation
+          // aside, and a complete artifact is never rebuilt: drop it here
+          val aside = graft.fs.Generations.aside(path)
+          if (fs.exists(aside)) fs.delete(aside, true)
+        } else timedBuild {
           val tmp = new Path(root,
             s"$sig/.${tag}_v$version.tmp-${java.util.UUID.randomUUID}")
           build.write.options(graft.fs.LocalFs.conf).mode("overwrite")
@@ -254,7 +259,9 @@ object AssetStore {
           // a concurrent builder that published while this one built wins
           // (here, or inside the swap): adopt its artifact
           if (complete(fs, path)) fs.delete(tmp, true)
-          else if (graft.fs.Generations.publish(fs, tmp, path)) {
+          else if (
+            try graft.fs.Generations.publish(fs, tmp, path)
+            catch { case e: java.io.IOException => fs.delete(tmp, true); throw e }) {
             buildCount.incrementAndGet()
             // retention is best-effort policy, parsed defensively: a
             // retention-policy typo must never fail a query whose

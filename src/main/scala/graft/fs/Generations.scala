@@ -6,23 +6,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** The engine's one crash-safe publish: a directory generation written at a
   * staging path replaces the live generation at `target` by rename. Asset
   * builds (`AssetStore.loadOrBuild`) and the keyed streaming upserts
-  * (`EventsStream.upsertBatch`, `topkMergeBatch`) both publish through it.
+  * (`EventsStream.mergeGeneration`) both publish through it.
   *
-  * The previous generation is renamed aside to `target.old` before the swap
-  * and deleted only after the new one has landed, so a crash at any point
-  * leaves one of four states, and [[current]] reads a complete generation
-  * in each — the old one or the new one, never none and never a mix:
-  *
-  *  - target only: the live generation;
-  *  - target and `target.old`: the target (the aside is stale — a crash
-  *    after the swap, before the aside's delete);
-  *  - `target.old` only: the previous generation (a crash between the two
-  *    renames);
-  *  - neither: nothing was ever published.
-  *
-  * A staging directory is never read; the next publish overwrites or
-  * replaces it. `GenerationsSpec` enumerates every single and double crash
-  * point of [[publish]] with a fault-injecting filesystem.
+  * A generation is a directory holding the [[Marker]]; a target directory
+  * without it (created empty, or left partial) counts as absent. The live
+  * generation is renamed aside to `target.old` before the swap and deleted
+  * only after the new one has landed, so after a crash at any point
+  * [[current]] reads the old generation or the new one, never none and
+  * never a mix: a stale aside beside a live target (a crash before the
+  * aside's delete) is ignored, and the aside alone (a crash between the two
+  * renames) is the previous generation. A staging directory is never read.
+  * `GenerationsSpec` enumerates every single and double crash point of
+  * [[publish]] with a fault-injecting filesystem.
   */
 object Generations {
 
@@ -34,9 +29,7 @@ object Generations {
   def aside(target: Path): Path = target.suffix(".old")
 
   /** The last published generation: the target, else its aside, else
-    * nothing — each only when it holds the [[Marker]] every published
-    * generation carries (a directory created empty at the target is not a
-    * generation). */
+    * nothing — each only when it holds the [[Marker]]. */
   def current(fs: FileSystem, target: Path): Option[Path] =
     Seq(target, aside(target)).find(p => fs.exists(new Path(p, Marker)))
 
@@ -51,23 +44,25 @@ object Generations {
     if (!fs.exists(new Path(staging, Marker)))
       throw new IOException(s"refusing to publish $staging: no $Marker")
     val old = aside(target)
-    // With a live target, an aside is stale: clear it and move the target
-    // there. With no target, the aside IS the last generation and stays
-    // until the new one has landed.
-    val setAside = fs.exists(target)
-    if (setAside) {
+    // A live target (one holding the marker, as in [[current]]) makes the
+    // aside stale: clear it and set the target aside. Otherwise the aside is
+    // the last generation and stays until the swap lands; a marker-less
+    // target is cleared so the swap cannot land inside it.
+    val live = fs.exists(new Path(target, Marker))
+    if (live) {
       if (fs.exists(old) && !fs.delete(old, true))
         throw new IOException(s"failed to clear stale $old")
       if (!fs.rename(target, old))
         throw new IOException(s"failed to set aside $target")
-    }
+    } else if (fs.exists(target) && !fs.delete(target, true))
+      throw new IOException(s"failed to clear $target, which holds no generation")
     try {
       if (!fs.rename(staging, target))
         throw new IOException(s"failed to publish $staging over $target")
     } catch {
       case e: IOException =>
         // put the previous generation back before failing
-        if (setAside)
+        if (live)
           try fs.rename(old, target) catch { case r: IOException => e.addSuppressed(r) }
         throw e
     }

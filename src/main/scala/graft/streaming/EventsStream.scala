@@ -436,7 +436,7 @@ object EventsStream {
     * generation or the new one for the next batch to read. A production
     * deployment gets true atomicity from a transactional table format, as
     * the q132 scaladoc documents. `wrapFs` wraps the publish filesystem
-    * (the specs' fault injector).
+    * (`upsertBatch` passes the specs' fault injector through).
     */
   private def mergeGeneration(target: String, batch: DataFrame,
       wrapFs: FileSystem => FileSystem)(merge: DataFrame => DataFrame): Unit = {
@@ -675,14 +675,13 @@ object EventsStream {
     * micro-batch a no-op (idempotent under at-least-once redelivery, the
     * same contract as [[upsertBatch]]'s newest-wins).
     */
-  private[graft] def topkMergeBatch(target: String, k: Int,
-      wrapFs: FileSystem => FileSystem = identity)(batch: DataFrame): Unit = {
+  private[graft] def topkMergeBatch(target: String, k: Int)(batch: DataFrame): Unit = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("value").desc, col("event_id"))
     val batchTop = batch.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-    mergeGeneration(target, batchTop, wrapFs)(
+    mergeGeneration(target, batchTop, identity)(
       _.drop("rank").dropDuplicates("event_id")
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= k))

@@ -186,6 +186,29 @@ class AssetStoreSpec extends SparkSpec {
     assert(again.toSeq == orig.toSeq && again.nonEmpty)
   }
 
+  test("a stale aside beside a complete artifact is dropped without a rebuild") {
+    val corpus = Files.createTempDirectory("graft_aside_corpus")
+    Files.copy(Paths.get(s"$sf001/documents.parquet"),
+      corpus.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    val root = Files.createTempDirectory("graft_aside_root").toString
+    val s = spark.newSession(); s.conf.set(AssetStore.DirConf, root)
+    def build = s.range(5).toDF("doc_id")
+    val orig = AssetStore.loadOrBuild(s, corpus.toString, "a", 1)(build)
+      .collect().map(_.toString).sorted
+    val sig = AssetStore.corpusSignature(s, corpus.toString)
+    // what a crash after a publish's swap, before the aside's delete, leaves
+    val pub = Paths.get(root, sig, "a_v1")
+    val aside = Paths.get(root, sig, "a_v1.old")
+    Files.createDirectories(aside)
+    pub.toFile.listFiles().foreach(f => Files.copy(f.toPath, aside.resolve(f.getName)))
+    val before = AssetStore.buildCount.get()
+    val again = AssetStore.loadOrBuild(s, corpus.toString, "a", 1)(build)
+      .collect().map(_.toString).sorted
+    assert(AssetStore.buildCount.get() == before, "a complete artifact must be served, not rebuilt")
+    assert(again.toSeq == orig.toSeq && again.nonEmpty)
+    assert(!Files.exists(aside), "the stale aside must be dropped")
+  }
+
   test("a manifest over 1 MiB still matches its artifact") {
     // a manifest line is name:length; a few thousand part files with long
     // names put the manifest past 1 MiB (at ~70 bytes a line, an asset of

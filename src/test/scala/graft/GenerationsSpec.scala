@@ -57,7 +57,10 @@ class GenerationsSpec extends AnyFunSuite {
     ("a live target and a stale aside",
       t => { write(t, 0); write(Generations.aside(t), -1) }, Some(0)),
     ("only the aside a crash between the renames leaves",
-      t => write(Generations.aside(t), 0), Some(0)))
+      t => write(Generations.aside(t), 0), Some(0)),
+    ("a marker-less target and an aside",
+      t => { write(Generations.aside(t), 0); write(t, -2); fs.delete(new Path(t, Generations.Marker), false) },
+      Some(0)))
 
   private def withRoot[A](f: java.nio.file.Path => A): A = {
     val root = Files.createTempDirectory("graft_generations")
@@ -139,12 +142,14 @@ class GenerationsSpec extends AnyFunSuite {
         name -> points.size / FaultyFs.modes.size
       }.toMap
       // the mutating operations of one publish from each state: the
-      // stale-aside clear, the set-aside, the swap and the aside's delete
+      // stale-aside clear or the marker-less target's delete, the set-aside,
+      // the swap and the aside's delete
       assert(counts == Map(
         "nothing published" -> 2,
         "a live target" -> 3,
         "a live target and a stale aside" -> 4,
-        "only the aside a crash between the renames leaves" -> 2), counts)
+        "only the aside a crash between the renames leaves" -> 2,
+        "a marker-less target and an aside" -> 3), counts)
     }
   }
 
